@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,7 +43,11 @@ from pyspark.sql import functions as F
 from quant_market_data_pipeline_spark.queries import register
 from quant_market_data_pipeline_spark.session import configure_runtime
 from quant_market_data_pipeline_spark.sources.tables import load_table
-from quant_market_data_pipeline_spark.streaming.bars_stream import TICK_SCHEMA
+from quant_market_data_pipeline_spark.streaming.bars_stream import (
+    TICK_SCHEMA,
+    fold_stream,
+    read_tick_stream,
+)
 from quant_market_data_pipeline_spark.streaming.pipeline import run_live_bars
 
 # Repo-local scratch root (wiped per run): the driver's session owns no
@@ -79,10 +84,8 @@ def _query_scratch(sf_dir: str, suffix: str = "") -> Path:
 
 
 def _sweep_stale_scratch(max_age_sec: float = 86400.0) -> None:
-    import time as _time
-
     try:
-        now = _time.time()
+        now = time.time()
         for child in _SCRATCH_ROOT.iterdir():
             if not child.name.startswith("pid") or child == _SCRATCH:
                 continue
@@ -202,8 +205,6 @@ WHERE v.event_type = 'view' AND p.event_type = 'purchase'
     "the lambda architecture promises, checked by hash.",
 )
 def q_stream_attribution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.streaming.bars_stream import (
         stream_stream_attribution,
     )
@@ -215,23 +216,13 @@ def q_stream_attribution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     v_dir, p_dir = str(base / "views"), str(base / "purchases")
     out, ckpt = str(base / "out"), str(base / "ckpt")
 
-    ev.filter(F.col("event_type") == "view").select(
-        "event_id", "ts", "user_id", "value"
-    ).coalesce(2).write.parquet(v_dir)
-    ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "ts", "user_id", "value"
-    ).coalesce(2).write.parquet(p_dir)
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    views = spark.readStream.schema(schema).parquet(v_dir)
-    purchases = spark.readStream.schema(schema).parquet(p_dir)
+    for kind, path in (("view", v_dir), ("purchase", p_dir)):
+        landed = ev.filter(F.col("event_type") == kind).select(
+            "event_id", "ts", "user_id", "value"
+        )
+        landed.coalesce(2).write.parquet(path)
+    views = spark.readStream.schema(landed.schema).parquet(v_dir)
+    purchases = spark.readStream.schema(landed.schema).parquet(p_dir)
     joined = stream_stream_attribution(
         views, purchases, key="user_id", ts="ts", horizon="1 hour"
     )
@@ -292,11 +283,6 @@ GROUP BY user_id, sid
     "just built-in windowed aggregation.",
 )
 def q_stream_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
     from quant_market_data_pipeline_spark.streaming.stateful import (
         sessionize_with_state,
     )
@@ -318,15 +304,7 @@ def q_stream_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = str(base / "landing")
     out, ckpt = str(base / "out"), str(base / "ckpt")
     corpus.repartition(4).write.parquet(landing)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    stream = read_tick_stream(spark, landing, schema=schema, fmt="parquet")
+    stream = read_tick_stream(spark, landing, corpus.schema, fmt="parquet")
     sessions = sessionize_with_state(stream, gap="30 minutes")
     query = (
         sessions.writeStream.format("parquet")
@@ -392,12 +370,7 @@ FROM w
     "carry-over is pinned separately in tests/test_stateful_streaming.",
 )
 def q_stream_zscore_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.operators.bars import build_bars
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
     from quant_market_data_pipeline_spark.streaming.stateful import (
         rolling_zscore_stream,
     )
@@ -419,15 +392,7 @@ def q_stream_zscore_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = str(base / "landing")
     out, ckpt = str(base / "out"), str(base / "ckpt")
     bars.repartition(4).write.parquet(landing)
-
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("bar_ts", T.TimestampType()),
-            T.StructField("close", T.DoubleType()),
-        ]
-    )
-    stream = read_tick_stream(spark, landing, schema=schema, fmt="parquet")
+    stream = read_tick_stream(spark, landing, bars.schema, fmt="parquet")
     z = rolling_zscore_stream(
         stream,
         window_bars=60,
@@ -457,50 +422,55 @@ def q_stream_zscore_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Crash-recovery: kill the stream mid-flight, restart from the checkpoint.
 # ---------------------------------------------------------------------------
-def _land_time_sliced(
-    df: DataFrame, ts_col: str, landing: str, n_slices: int
-) -> None:
-    """Write ``df`` as ``n_slices`` single-file parquet slices, slice i
-    strictly before slice i+1 in event time, in ascending-mtime order —
-    so a file-source stream with ``maxFilesPerTrigger=1`` processes the
-    data in event-time order across micro-batches (the per-key ordering
-    the stateful operators' ring buffers depend on), and the watermark
-    after slice i (max(ts_i) - delay) sits strictly below all later
-    slices' data (no late drops, deterministic emission)."""
-    us = F.unix_micros(F.col(ts_col))
-    bounds = [
-        int(b)
-        for b in df.select(
-            F.percentile_approx(
-                us, [i / n_slices for i in range(1, n_slices)], 10000
-            ).alias("b")
-        ).collect()[0]["b"]
-    ]
-    edges = [None, *bounds, None]
+def _land_sliced(df: DataFrame, slice_col: str, landing: str, n: int) -> None:
+    """Write ``df`` as ``n`` single-file parquet slices, slice i holding
+    the rows whose ``slice_col`` equals i (the column is not landed), in
+    ascending-mtime order — so a file-source stream with
+    ``maxFilesPerTrigger=1`` reads slice i as its i-th data batch."""
     # The file source replays files in mtime order; on filesystems with
     # coarse mtime granularity two back-to-back writes can share an
-    # mtime and be picked up out of event-time order, breaking the
-    # per-key ordering the stateful ring buffers require.  Stamp each
-    # slice's files with an explicit strictly-increasing mtime (1 s
-    # apart, anchored 1 h in the past so restamped files never sort
-    # after genuinely newer ones).
-    import os
-    import time
-
+    # mtime and be picked up out of slice order, breaking the per-key
+    # ordering the stateful ring buffers require.  Stamp each slice's
+    # files with an explicit strictly-increasing mtime (1 s apart,
+    # anchored 1 h in the past so restamped files never sort after
+    # genuinely newer ones).
     t0 = time.time() - 3600.0
     seen: set[str] = set()
-    for i in range(n_slices):
-        sl = df
-        if edges[i] is not None:
-            sl = sl.filter(us >= F.lit(edges[i]))
-        if edges[i + 1] is not None:
-            sl = sl.filter(us < F.lit(edges[i + 1]))
-        sl.coalesce(1).write.mode("append").parquet(landing)
+    for i in range(n):
+        (
+            df.filter(F.col(slice_col) == i)
+            .drop(slice_col)
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(landing)
+        )
         for fname in os.listdir(landing):
             path = os.path.join(landing, fname)
             if fname.endswith(".parquet") and path not in seen:
                 os.utime(path, (t0 + i, t0 + i))
                 seen.add(path)
+
+
+def _land_time_sliced(
+    df: DataFrame, ts_col: str, landing: str, n_slices: int
+) -> None:
+    """Land ``df`` in ``n_slices`` approx-percentile slices of ``ts_col``,
+    slice i strictly before slice i+1 in event time — so a one-file-per-
+    trigger stream processes the data in event-time order across
+    micro-batches (the per-key ordering the stateful operators' ring
+    buffers depend on), and the watermark after slice i (max(ts_i) -
+    delay) sits strictly below all later slices' data (no late drops,
+    deterministic emission)."""
+    us = F.unix_micros(F.col(ts_col))
+    bounds = df.select(
+        F.percentile_approx(
+            us, [i / n_slices for i in range(1, n_slices)], 10000
+        ).alias("b")
+    ).collect()[0]["b"]
+    # slice index = number of bounds at or below the row (NULL ts -> NULL
+    # index -> not landed)
+    idx = sum(((us >= F.lit(int(b))).cast("int") for b in bounds), F.lit(0))
+    _land_sliced(df.withColumn("__slice", idx), "__slice", landing, n_slices)
 
 
 def _kill_after_batches(query, min_batches: int = 2, deadline_s: int = 180) -> int:
@@ -509,8 +479,6 @@ def _kill_after_batches(query, min_batches: int = 2, deadline_s: int = 180) -> i
     immediately — a genuine mid-flight interrupt (whatever batch is in
     progress is cut; its replay on restart is the recovery under test).
     Returns the committed data-batch count at the kill."""
-    import time
-
     batches = 0
     deadline = time.time() + deadline_s
     while time.time() < deadline:
@@ -662,12 +630,7 @@ def _run_zscore_crash_recovery(spark: SparkSession, sf_dir: str):
     makes a killed batch's orphan files invisible to readers until the
     replay commits them (exactly-once).
     """
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.operators.bars import build_bars
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
     from quant_market_data_pipeline_spark.streaming.stateful import (
         rolling_zscore_stream,
     )
@@ -688,18 +651,9 @@ def _run_zscore_crash_recovery(spark: SparkSession, sf_dir: str):
     out, ckpt = str(base / "out"), str(base / "ckpt")
     _land_time_sliced(bars, "bar_ts", landing, n_slices=6)
 
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("bar_ts", T.TimestampType()),
-            T.StructField("close", T.DoubleType()),
-        ]
-    )
-
     def start(available_now: bool):
         stream = read_tick_stream(
-            spark, landing, schema=schema, fmt="parquet",
-            max_files_per_trigger=1,
+            spark, landing, bars.schema, fmt="parquet", max_files_per_trigger=1
         )
         z = rolling_zscore_stream(
             stream,
@@ -827,12 +781,7 @@ WHERE s.rn >= 15
     "16-digit margin.",
 )
 def q_stream_rsi_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.operators.bars import build_bars
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
     from quant_market_data_pipeline_spark.streaming.stateful import (
         wilder_rsi_stream,
     )
@@ -859,16 +808,8 @@ def q_stream_rsi_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = str(base / "landing")
     out, ckpt = str(base / "out"), str(base / "ckpt")
     _land_time_sliced(bars, "bar_ts", landing, n_slices=4)
-
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("bar_ts", T.TimestampType()),
-            T.StructField("close", T.DoubleType()),
-        ]
-    )
     stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
+        spark, landing, bars.schema, fmt="parquet", max_files_per_trigger=1
     )
     rsi = wilder_rsi_stream(
         stream, period=14, key="symbol", ts="bar_ts", close="close"
@@ -941,11 +882,6 @@ WINDOW wb AS (PARTITION BY symbol ORDER BY bucket_id
     "ring the batch window computes.",
 )
 def q_stream_vpin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
     from quant_market_data_pipeline_spark.streaming.stateful import (
         vpin_stream,
     )
@@ -963,17 +899,8 @@ def q_stream_vpin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = str(base / "landing")
     out, ckpt = str(base / "out"), str(base / "ckpt")
     _land_time_sliced(ticks, "ts", landing, n_slices=3)
-
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
     stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
+        spark, landing, ticks.schema, fmt="parquet", max_files_per_trigger=1
     )
     vpin = vpin_stream(
         stream,
@@ -1081,14 +1008,9 @@ ORDER BY e.symbol
     "batch HLL + exact distinct per symbol.",
 )
 def q_stream_hll_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.queries.relational import (
         hll_estimate_from_regs,
         hll_rho_frame,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -1098,46 +1020,21 @@ def q_stream_hll_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _query_scratch(sf_dir, "_hll")
     landing = str(base / "landing")
-    regs_out, ckpt = str(base / "regs"), str(base / "ckpt")
     _land_time_sliced(ev, "ts", landing, n_slices=4)
-
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
     stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
+        spark, landing, ev.schema, fmt="parquet", max_files_per_trigger=1
     )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch register PARTIALS; the batch_id partition makes a
-        # checkpoint-replayed batch overwrite exactly its own leaves
-        partial = (
+    def partial(batch_df: DataFrame) -> DataFrame:
+        # per-batch register partials
+        return (
             hll_rho_frame(batch_df, "user_id", ["symbol"])
             .groupBy("symbol", "bucket")
             .agg(F.max("rho").alias("rho_max"))
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(regs_out)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     merged = (
-        spark.read.parquet(regs_out)
+        fold_stream(stream, str(base / "regs"), str(base / "ckpt"), partial)
         .groupBy("symbol", "bucket")
         .agg(F.max("rho_max").alias("rho_max"))
     )
@@ -1245,15 +1142,11 @@ ORDER BY e.symbol, e.q
 )
 def q_stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     from quant_market_data_pipeline_spark.queries.relational import (
         _QH_BINS,
         _QH_QS,
         qh_bin_expr,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -1273,25 +1166,14 @@ def q_stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _query_scratch(sf_dir, "_qh")
     landing = str(base / "landing")
-    hist_out, ckpt = str(base / "hist"), str(base / "ckpt")
     _land_time_sliced(ev, "ts", landing, n_slices=4)
-
-    schema = T.StructType(
-        [
-            T.StructField("symbol", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
     stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
+        spark, landing, ev.schema, fmt="parquet", max_files_per_trigger=1
     )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch bin-count PARTIALS against the fixed edges; the
-        # batch_id partition makes a checkpoint-replayed batch
-        # overwrite exactly its own leaves (sum stays exact)
-        partial = (
+    def partial(batch_df: DataFrame) -> DataFrame:
+        # per-batch bin-count partials against the fixed edges
+        return (
             batch_df.join(F.broadcast(edges), "symbol")
             .select(
                 "symbol",
@@ -1301,28 +1183,13 @@ def q_stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("symbol", "bin")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(hist_out)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     # SUM-merge of partials == the batch histogram, exactly (integer
     # addition); from here the read-out is the batch audit's cumsum
     # walk + interpolation, keyed by symbol.
     hist = (
-        spark.read.parquet(hist_out)
+        fold_stream(stream, str(base / "hist"), str(base / "ckpt"), partial)
         .groupBy("symbol", "bin")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
@@ -1481,15 +1348,11 @@ ORDER BY exact_count DESC, user_key
 )
 def q_stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     from quant_market_data_pipeline_spark.queries.textprep import (
         _CMS_ROWS,
         _CMS_TOPK,
         cms_bucket_expr,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -1499,17 +1362,9 @@ def q_stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _query_scratch(sf_dir, "_cms")
     landing = str(base / "landing")
-    cms_out, ckpt = str(base / "cms"), str(base / "ckpt")
     _land_time_sliced(ev, "ts", landing, n_slices=4)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("w", T.StringType()),
-        ]
-    )
     stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
+        spark, landing, ev.schema, fmt="parquet", max_files_per_trigger=1
     )
 
     def row_buckets(w_col):
@@ -1525,35 +1380,19 @@ def q_stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch counter PARTIALS; the batch_id partition makes a
-        # checkpoint-replayed batch overwrite exactly its own leaves
-        partial = (
+    def partial(batch_df: DataFrame) -> DataFrame:
+        # per-batch counter partials
+        return (
             batch_df.select(row_buckets(F.col("w")).alias("h"))
             .select("h.r", "h.bucket")
             .groupBy("r", "bucket")
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(cms_out)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     # SUM-merge of partials == the batch sketch, exactly (integer
     # addition); the read-out is the batch audit's probe join.
     cms = (
-        spark.read.parquet(cms_out)
+        fold_stream(stream, str(base / "cms"), str(base / "ckpt"), partial)
         .groupBy("r", "bucket")
         .agg(F.sum("c").cast("bigint").alias("c"))
     )
@@ -1695,14 +1534,9 @@ FROM probed
     "bits/63 lane rows per batch, never the key space.",
 )
 def q_stream_bloom_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.queries.relational import (
         _BF_LANE_BITS,
         bf_pos_expr,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -1710,22 +1544,13 @@ def q_stream_bloom_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _query_scratch(sf_dir, "_bloom")
     landing = str(base / "landing")
-    bf_out, ckpt = str(base / "bloom"), str(base / "ckpt")
     _land_time_sliced(ev, "ts", landing, n_slices=4)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-        ]
-    )
     stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
+        spark, landing, ev.schema, fmt="parquet", max_files_per_trigger=1
     )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch (lane, bits) OR-partials; the batch_id partition
-        # keeps the sink idempotent (OR would forgive replays anyway)
+    def partial(batch_df: DataFrame) -> DataFrame:
+        # per-batch (lane, bits) OR-partials
         pos = batch_df.select(
             F.explode(
                 F.array(
@@ -1736,7 +1561,7 @@ def q_stream_bloom_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("pos")
         ).distinct()
-        partial = (
+        return (
             pos.select(
                 F.floor(F.col("pos") / _BF_LANE_BITS)
                 .cast("int")
@@ -1747,26 +1572,11 @@ def q_stream_bloom_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("lane")
             .agg(F.bit_or("bit").alias("bits"))
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(bf_out)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     # OR-merge of partials == the batch-built filter, exactly
     bitmap = (
-        spark.read.parquet(bf_out)
+        fold_stream(stream, str(base / "bloom"), str(base / "ckpt"), partial)
         .groupBy("lane")
         .agg(F.bit_or("bits").alias("bits"))
     )
@@ -1899,8 +1709,6 @@ def _stream_minhash_oracle() -> str:
     "doc per batch, never the shingle stream.",
 )
 def q_stream_minhash_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from quant_market_data_pipeline_spark.llm.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
@@ -1909,71 +1717,29 @@ def q_stream_minhash_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quant_market_data_pipeline_spark.queries.llm import (
         lsh_corpus_shingled,
     )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
-    )
 
     configure_runtime(spark)
     shingled = lsh_corpus_shingled(spark, sf_dir)
 
     base = _query_scratch(sf_dir, "_mh")
     landing = str(base / "landing")
-    sig_out, ckpt = str(base / "sigs"), str(base / "ckpt")
 
     # hash-sliced landing: slice = h(shingle) % 4, so EVERY doc's
     # shingle set is split across (up to) all 4 micro-batches and the
     # MIN merge has real cross-batch work — a doc-sliced landing would
-    # make the merge vacuously single-partial.  MIN is order-
-    # independent, so unlike the stateful queries' time-sliced landing
-    # no mtime choreography is needed.
-    n_slices = 4
-    sliced = shingled.withColumn(
-        "slice", (seeded_md5_long("slice", F.col("sh")) % n_slices)
-    )
-    for i in range(n_slices):
-        (
-            sliced.filter(F.col("slice") == i)
-            .drop("slice")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(landing)
-        )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("sh", T.StringType()),
-        ]
-    )
+    # make the merge vacuously single-partial.
+    slice_of = seeded_md5_long("slice", F.col("sh")) % 4
+    _land_sliced(shingled.withColumn("slice", slice_of), "slice", landing, 4)
     stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
+        spark, landing, shingled.schema, fmt="parquet", max_files_per_trigger=1
     )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the SHARED signature function builds the partial; batch_id
-        # partitioning makes a checkpoint-replayed batch overwrite
-        # exactly its own leaves (idempotent recovery)
-        partial = minhash_signatures(batch_df).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(sig_out)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    # element-wise MIN merge of partials == the batch signature exactly
+    # the SHARED signature function builds the partial; element-wise MIN
+    # merge of partials == the batch signature exactly
     merged = (
-        spark.read.parquet(sig_out)
+        fold_stream(
+            stream, str(base / "sigs"), str(base / "ckpt"), minhash_signatures
+        )
         .groupBy("doc_id")
         .agg(*[F.min(f"h{i}").alias(f"h{i}") for i in range(16)])
     )
@@ -2051,15 +1817,11 @@ ORDER BY event_type
 )
 def q_stream_kmv_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     from quant_market_data_pipeline_spark.queries.relational import (
         _KMV_K,
         _kmv_est_expr,
         kmv_hv_expr,
-    )
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -2069,26 +1831,15 @@ def q_stream_kmv_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _query_scratch(sf_dir, "_kmv")
     landing = str(base / "landing")
-    kmv_out, ckpt = str(base / "kmv"), str(base / "ckpt")
     _land_time_sliced(ev, "ts", landing, n_slices=4)
-
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-        ]
-    )
     stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
+        spark, landing, ev.schema, fmt="parquet", max_files_per_trigger=1
     )
     wk = Window.partitionBy("event_type").orderBy("hv")
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # per-batch k-min partial: k smallest distinct hashes per type;
-        # the batch_id partition makes a checkpoint-replayed batch
-        # overwrite exactly its own leaves (idempotent recovery)
-        partial = (
+    def partial(batch_df: DataFrame) -> DataFrame:
+        # per-batch k-min partial: k smallest distinct hashes per type
+        return (
             batch_df.select(
                 "event_type", kmv_hv_expr(F.col("user_id")).alias("hv")
             )
@@ -2096,27 +1847,12 @@ def q_stream_kmv_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("rn", F.row_number().over(wk))
             .filter(F.col("rn") <= _KMV_K)
             .select("event_type", "hv")
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(kmv_out)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
     # k-min-of-union merge == the batch sketch exactly (order statistic
     # of the distinct union); the estimator is the shared branch
     merged = (
-        spark.read.parquet(kmv_out)
+        fold_stream(stream, str(base / "kmv"), str(base / "ckpt"), partial)
         .select("event_type", "hv")
         .distinct()
         .withColumn("rn", F.row_number().over(wk))
@@ -2266,7 +2002,6 @@ def q_stream_vector_index_e2e(
     import math
 
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     from quant_market_data_pipeline_spark.llm.hashing import (
         seeded_md5_long,
@@ -2277,10 +2012,6 @@ def q_stream_vector_index_e2e(
         sq8_codes,
         sq8_dim_stats,
         sq8_recon,
-    )
-    from quant_market_data_pipeline_spark.sources.tables import load_table
-    from quant_market_data_pipeline_spark.streaming.bars_stream import (
-        read_tick_stream,
     )
 
     configure_runtime(spark)
@@ -2303,35 +2034,18 @@ def q_stream_vector_index_e2e(
 
     base = _query_scratch(sf_dir, "_vecidx")
     landing = str(base / "landing")
-    codes_out, ckpt = str(base / "codes"), str(base / "ckpt")
 
     # hash-sliced landing: 4 disjoint arrival batches (MIN/OR-style
     # order independence is not needed — every vector arrives exactly
     # once; the slice hash just makes arrival order arbitrary)
-    n_slices = 4
-    sliced = emb.withColumn(
-        "slice", (seeded_md5_long("vslice", F.col("vec_id")) % n_slices)
-    )
-    for i in range(n_slices):
-        (
-            sliced.filter(F.col("slice") == i)
-            .drop("slice")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(landing)
-        )
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
+    slice_of = seeded_md5_long("vslice", F.col("vec_id")) % 4
+    _land_sliced(emb.withColumn("slice", slice_of), "slice", landing, 4)
     stream = read_tick_stream(
-        spark, landing, schema=schema, fmt="parquet", max_files_per_trigger=1
+        spark, landing, emb.schema, fmt="parquet", max_files_per_trigger=1
     )
 
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def partial(batch_df: DataFrame) -> DataFrame:
+        # per-batch (vec_id, code, cell) against the frozen index
         bvecs = batch_df.select(
             "vec_id", as_double(F.col("embedding")).alias("v")
         )
@@ -2349,30 +2063,12 @@ def q_stream_vector_index_e2e(
             .filter(F.col("__rn") == 1)
             .select("vec_id", F.col("ccid").alias("cell"))
         )
-        out = (
-            sq8_codes(bvecs, lo, hi)
-            .join(assign, "vec_id")
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            out.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(codes_out)
-        )
-
-    query = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+        return sq8_codes(bvecs, lo, hi).join(assign, "vec_id")
 
     # ---- read-out: per-slice stats from the STREAMED codes ----------
-    streamed = spark.read.parquet(codes_out).select(
-        "vec_id", "code", "cell"
-    )
+    streamed = fold_stream(
+        stream, str(base / "codes"), str(base / "ckpt"), partial
+    ).select("vec_id", "code", "cell")
     recon = sq8_recon(streamed, lo, hi)
     rerr = vecs.join(recon, "vec_id").select(
         "vec_id", l2_sq(F.col("v"), F.col("rv")).alias("e2")
@@ -2390,9 +2086,7 @@ def q_stream_vector_index_e2e(
     per_row = (
         streamed.join(rerr, "vec_id")
         .select(
-            (seeded_md5_long("vslice", F.col("vec_id")) % 4)
-            .cast("int")
-            .alias("slice"),
+            slice_of.cast("int").alias("slice"),
             "cell",
             "e2",
             row_sum.alias("row_sum"),

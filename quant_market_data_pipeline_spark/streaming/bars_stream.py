@@ -23,6 +23,8 @@ that's 3 windows per symbol regardless of throughput.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -182,6 +184,41 @@ def stream_bars(
     )
 
 
+def _write_batch_leaves(
+    df: DataFrame, out_dir: str, batch_id: int, part_cols: tuple[str, ...] = ()
+) -> None:
+    """Write one micro-batch's output under ``(*part_cols, batch_id)``
+    leaves with dynamic partition overwrite: the one place that decides
+    a foreachBatch sink's idempotence scope.
+
+    ``batch_id`` is that scope.  A micro-batch replayed from the same
+    checkpoint (failure/retry) rewrites exactly its own ``batch_id``
+    leaves, so the sink is exactly-once at the batch level while other
+    batches' output is untouched.  Any coarser scope is silent data loss:
+    distinct batches share trading dates (and sketch partials share every
+    key), so overwriting whole ``part_cols`` partitions would let each
+    batch wipe what earlier batches wrote.  Readers prune on
+    ``part_cols``; ``batch_id`` is only the overwrite scope.
+
+    The frame is clustered by its leaf columns before the write: without
+    the exchange every shuffle partition of the frame opens a file in
+    every leaf it touches (4,797 files for 38,900 bar rows at sf0.1, the
+    batch's addBatch wall bound by file commits).  Hashing on the leaf
+    columns makes each leaf exactly one task's output, so file count
+    equals leaf count at any scale.  Leaves cannot skew: a bar leaf holds
+    at most one row per window, and a fold partial is the batch already
+    reduced to summary rows (registers, counters, signatures, codes).
+    """
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .repartition(*part_cols, "batch_id")
+        .write.mode("overwrite")
+        .partitionBy(*part_cols, "batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(out_dir)
+    )
+
+
 def parquet_bar_sink(
     bars: DataFrame,
     out_dir: str,
@@ -191,42 +228,18 @@ def parquet_bar_sink(
     """Idempotent partitioned-parquet sink via foreachBatch.
 
     Append-mode emits each finalized window exactly once, so distinct
-    micro-batches never produce the same (key, bar_ts) — but they DO share
-    trading dates, so the overwrite scope must be batch-granular, not
-    date-granular: overwriting whole ``trading_date`` partitions would let
-    every batch wipe the bars earlier batches wrote for that date (silent
-    data loss in continuous operation or any multi-batch availableNow run).
-    Each write therefore lands under ``(trading_date, .., batch_id)`` with
-    dynamic partition overwrite: a replayed micro-batch (failure/retry with
-    the same checkpoint) rewrites exactly its own ``batch_id`` leaves —
-    exactly-once at the batch level — while other batches' output is
-    untouched.  Readers prune on ``trading_date`` (and ``partition_by``)
-    as before; ``batch_id`` is just the idempotence scope.
+    micro-batches never produce the same (key, bar_ts).  Each batch lands
+    under ``(trading_date, partition_by, batch_id)`` through
+    :func:`_write_batch_leaves`, which owns the overwrite scope.
     """
-
-    part_cols = ["trading_date"] + ([partition_by] if partition_by else [])
+    part_cols = ("trading_date",) + ((partition_by,) if partition_by else ())
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("trading_date", F.to_date("bar_ts"))
-            .withColumn("batch_id", F.lit(batch_id))
-            # r15 (guide §6): cluster the batch by its partition columns
-            # before the write — without this every one of the frame's
-            # shuffle partitions opens a file in every partition leaf it
-            # touches (measured at sf0.1: 4,797 files for 38,900 bar
-            # rows, and the per-batch addBatch wall is file-commit
-            # bound, 42 s for batch 1).  One hash exchange of the
-            # batch's bar rows (dimension-sized: bars, not ticks) makes
-            # each (trading_date, key) leaf exactly one task's output —
-            # same rows, same partition values, ~10x fewer files here
-            # and file count ~ leaf count at any scale.  Hot leaves
-            # stay bounded: a (date, key) pair holds at most one bar
-            # row per window, so single-task leaves cannot skew.
-            .repartition(*part_cols)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols, "batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_dir)
+        _write_batch_leaves(
+            batch_df.withColumn("trading_date", F.to_date("bar_ts")),
+            out_dir,
+            batch_id,
+            part_cols,
         )
 
     return (
@@ -234,6 +247,38 @@ def parquet_bar_sink(
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(write_batch)
     )
+
+
+def fold_stream(
+    stream: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    partial_fn: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Drain ``stream`` under ``availableNow``, writing
+    ``partial_fn(batch_df)`` for every micro-batch as that batch's
+    ``batch_id`` leaf (:func:`_write_batch_leaves`), and return every
+    partial written so far as one frame with a ``batch_id`` column.
+
+    This is the incremental half of a mergeable summary: the caller
+    applies the summary's associative merge to the returned partials
+    (max, sum, OR, element-wise min, k-min-of-union, or none for a
+    plain per-batch map), so the merged result is independent of how the
+    drain was split into micro-batches, and a batch replayed from the
+    checkpoint replaces its own partial instead of adding a second one.
+    """
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        _write_batch_leaves(partial_fn(batch_df), out_dir, batch_id)
+
+    (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return stream.sparkSession.read.parquet(out_dir)
 
 
 def stream_stream_attribution(

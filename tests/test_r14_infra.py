@@ -140,21 +140,35 @@ def test_r14_window_drains_r7_cohort():
 def test_r14_touched_covers_every_query_scratch_site():
     """Every streaming e2e query creates its scratch through
     _query_scratch (the ADVICE r13 liveness-touch refactor), and every
-    one of them is in the r14 TOUCHED window."""
-    import re
+    one of them is in the r14 TOUCHED window.  Checked per registered
+    function, on its own source or that of a module helper it calls
+    (the crash-recovery runners), so moving shared code out of the
+    query bodies cannot break it."""
+    import inspect
 
     from quant_market_data_pipeline_spark import queries as q
+    from quant_market_data_pipeline_spark.queries import streaming_e2e as se
 
-    src = open(
-        os.path.join(
-            REPO,
-            "quant_market_data_pipeline_spark",
-            "queries",
-            "streaming_e2e.py",
+    def makes_scratch(fn) -> bool:
+        helpers = [
+            getattr(se, n)
+            for n in fn.__code__.co_names
+            if inspect.isfunction(getattr(se, n, None))
+            and getattr(se, n).__module__ == se.__name__
+        ]
+        return any(
+            "= _query_scratch(sf_dir" in inspect.getsource(f)
+            for f in (fn, *helpers)
         )
-    ).read()
-    names = re.findall(r'@register\(\s*\n?\s*"([^"]+)"', src)
-    assert src.count("= _query_scratch(sf_dir") == len(names)
+
+    fns = {
+        name: spec.spark
+        for name, spec in q.load_all().items()
+        if spec.spark.__module__ == se.__name__
+    }
+    assert len(fns) >= 15
+    no_scratch = {name for name, fn in fns.items() if not makes_scratch(fn)}
+    assert not no_scratch, f"queries bypassing _query_scratch: {no_scratch}"
     window = set(q._R14_NEW) | set(q._R14_TOUCHED)
-    missing = set(names) - window
+    missing = set(fns) - window
     assert not missing, f"scratch-refactored queries not in window: {missing}"

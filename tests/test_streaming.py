@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pandas as pd
@@ -541,3 +542,128 @@ def test_crash_recovery_exactly_once(spark):
     want = twin.toPandas().sort_values(["symbol", "bar_ts"]).reset_index(drop=True)
     assert len(got) == len(want) > 0, (len(got), len(want), stats)
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def _fold_sliced(spark, tmp):
+    """Land a 3-slice keyed frame and fold it through ``fold_stream``
+    (one landing file per micro-batch, count-per-key partials).
+    Returns the partials frame."""
+    from quant_market_data_pipeline_spark.queries.streaming_e2e import (
+        _land_sliced,
+    )
+    from quant_market_data_pipeline_spark.streaming.bars_stream import (
+        fold_stream,
+    )
+
+    rows = spark.range(0, 3000).select(
+        (F.col("id") % 3).alias("slice"),
+        (F.col("id") % 97).alias("k"),
+    )
+    landing = f"{tmp}/landing"
+    if not os.path.exists(landing):  # a rerun reads the same landing
+        _land_sliced(rows, "slice", landing, 3)
+    stream = read_tick_stream(
+        spark,
+        landing,
+        rows.drop("slice").schema,
+        fmt="parquet",
+        max_files_per_trigger=1,
+    )
+    return fold_stream(
+        stream,
+        f"{tmp}/partials",
+        f"{tmp}/ckpt",
+        lambda b: b.groupBy("k").agg(F.count(F.lit(1)).alias("c")),
+    )
+
+
+def _leaf_files(out_dir):
+    return {
+        leaf: sorted(
+            f for f in os.listdir(os.path.join(out_dir, leaf))
+            if f.endswith(".parquet")
+        )
+        for leaf in os.listdir(out_dir)
+        if leaf.startswith("batch_id=")
+    }
+
+
+def _merged(partials):
+    return sorted(
+        tuple(r) for r in partials.groupBy("k").agg(F.sum("c")).collect()
+    )
+
+
+def test_fold_stream_writes_one_file_per_batch_leaf(spark):
+    """Each ``batch_id`` leaf a ``fold_stream`` batch writes is one
+    parquet file, however many shuffle partitions the partial spans.
+    Partition coalescing is off so the partial keeps all of them, as a
+    partial larger than the adaptive advisory size would."""
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            partials = _fold_sliced(spark, tmp)
+            assert partials.select("batch_id").distinct().count() == 3
+            leaves = _leaf_files(f"{tmp}/partials")
+    finally:
+        spark.conf.set(conf, old)
+    assert len(leaves) == 3
+    assert all(len(files) == 1 for files in leaves.values()), leaves
+
+
+def test_fold_stream_checkpoint_replay_is_idempotent(spark):
+    """Exactly-once for every ``fold_stream`` sink: drop the last
+    commit from the checkpoint and rerun from it.  The uncommitted batch
+    must replay under its own batch_id, overwrite its own leaf (same
+    leaf set, no second partial) and leave the merged output unchanged.
+    """
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.batches = []
+            self.terminated = threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            self.batches.append((p.batchId, p.numInputRows))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.terminated.set()
+
+    with tempfile.TemporaryDirectory() as tmp:
+        first = _merged(_fold_sliced(spark, tmp))
+        leaves = _leaf_files(f"{tmp}/partials")
+        commits = f"{tmp}/ckpt/commits"
+        last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+        assert last >= 2  # >= 3 data batches drained
+        for name in (str(last), f".{last}.crc"):
+            if os.path.exists(os.path.join(commits, name)):
+                os.remove(os.path.join(commits, name))
+
+        progress = Progress()
+        spark.streams.addListener(progress)
+        try:
+            again = _merged(_fold_sliced(spark, tmp))
+            assert progress.terminated.wait(60)
+        finally:
+            spark.streams.removeListener(progress)
+
+        assert os.path.exists(os.path.join(commits, str(last)))
+        assert set(_leaf_files(f"{tmp}/partials")) == set(leaves)
+    # batch N, and only batch N, re-read its input
+    assert [b for b, n in progress.batches if n > 0] == [last], (
+        progress.batches
+    )
+    assert len(first) == 97
+    assert again == first

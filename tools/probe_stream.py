@@ -15,34 +15,23 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-STREAM_QUERIES = [
-    "stream_bars_5min_e2e",
-    "stream_attribution_e2e",
-    "stream_sessionize_e2e",
-    "stream_zscore_e2e",
-    "stream_crash_recovery_e2e",
-    "stream_zscore_crash_e2e",
-    "stream_rsi_e2e",
-    "stream_vpin_e2e",
-    "stream_hll_distinct_e2e",
-    "stream_quantile_e2e",
-    "stream_countmin_e2e",
-    "stream_bloom_e2e",
-    "stream_minhash_e2e",
-    "stream_kmv_e2e",
-    "stream_vector_index_e2e",
-]
-
 
 def main() -> None:
-    names = sys.argv[1:] or STREAM_QUERIES
-
-    from quant_market_data_pipeline_spark.queries import load_all
+    from quant_market_data_pipeline_spark.queries import (
+        load_all,
+        streaming_e2e,
+    )
     from quant_market_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="probe_stream")
     spark.sparkContext.setLogLevel("ERROR")
     registry = load_all()
+    # default: every registered query implemented in queries.streaming_e2e
+    names = sys.argv[1:] or [
+        name
+        for name, spec in registry.items()
+        if spec.spark.__module__ == streaming_e2e.__name__
+    ]
 
     def calib() -> float:
         t0 = time.perf_counter()
