@@ -47,6 +47,7 @@ from quant_market_data_pipeline_spark.streaming.bars_stream import (
     TICK_SCHEMA,
     fold_stream,
     read_tick_stream,
+    start_stream,
 )
 from quant_market_data_pipeline_spark.streaming.pipeline import run_live_bars
 
@@ -226,13 +227,12 @@ def q_stream_attribution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream_stream_attribution(
         views, purchases, key="user_id", ts="ts", horizon="1 hour"
     )
-    query = (
+    query = start_stream(
         joined.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(availableNow=True)
-        .start()
     )
     query.awaitTermination()
 
@@ -306,13 +306,12 @@ def q_stream_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus.repartition(4).write.parquet(landing)
     stream = read_tick_stream(spark, landing, corpus.schema, fmt="parquet")
     sessions = sessionize_with_state(stream, gap="30 minutes")
-    query = (
+    query = start_stream(
         sessions.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(availableNow=True)
-        .start()
     )
     query.awaitTermination()
 
@@ -401,13 +400,12 @@ def q_stream_zscore_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts="bar_ts",
         value="close",
     )
-    query = (
+    query = start_stream(
         z.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(availableNow=True)
-        .start()
     )
     query.awaitTermination()
 
@@ -671,7 +669,7 @@ def _run_zscore_crash_recovery(spark: SparkSession, sf_dir: str):
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_stream(writer)
 
     q1 = start(available_now=False)
     phase1_batches = _kill_after_batches(q1)
@@ -814,13 +812,12 @@ def q_stream_rsi_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     rsi = wilder_rsi_stream(
         stream, period=14, key="symbol", ts="bar_ts", close="close"
     )
-    query = (
+    query = start_stream(
         rsi.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(availableNow=True)
-        .start()
     )
     query.awaitTermination()
 
@@ -911,13 +908,12 @@ def q_stream_vpin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiebreak="event_id",
         value="value",
     )
-    query = (
+    query = start_stream(
         vpin.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(availableNow=True)
-        .start()
     )
     query.awaitTermination()
 

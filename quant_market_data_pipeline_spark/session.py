@@ -46,8 +46,10 @@ _STATIC_CONF: dict[str, str] = {
 _RUNTIME_CONF: dict[str, str] = {
     # Naive-UTC canonical timestamps (audit_pipeline.py:81-82).
     "spark.sql.session.timeZone": "UTC",
-    # Local harness: 32 cores -> 32 shuffle partitions; AQE coalesces below
-    # this when maps are small.  On a cluster this is set to 2-3x cores.
+    # Batch queries: 32 shuffle partitions, which AQE coalesces when maps
+    # are small.  On a cluster this is set to 2-3x cores.  Stateful
+    # micro-batches run with AQE off, so streams do not use this value:
+    # streaming/bars_stream.py:start_stream caps it at the core count.
     "spark.sql.shuffle.partitions": os.environ.get(
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
     ),

@@ -8,4 +8,7 @@ sinks (``bars_stream.parquet_bar_sink``).
 
 ``bars_stream.fold_stream`` drains a stream under ``availableNow`` into
 per-batch partials through the same batch-leaf writer, for mergeable
-summaries (sketches, signatures, index codes) merged at read-out."""
+summaries (sketches, signatures, index codes) merged at read-out.
+
+``bars_stream.start_stream`` starts every engine stream, with its shuffle
+(and state) partitions capped at the core count."""

@@ -23,12 +23,13 @@ that's 3 windows per symbol regardless of throughput.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 TICK_SCHEMA = T.StructType(
     [
@@ -249,6 +250,43 @@ def parquet_bar_sink(
     )
 
 
+_START_LOCK = threading.Lock()
+
+
+def start_stream(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` with ``spark.sql.shuffle.partitions`` capped at
+    the cores (``sparkContext.defaultParallelism``): the one place that
+    decides how engine streams are partitioned.
+
+    Spark runs stateful micro-batches with AQE off, so every shuffle
+    partition of a stateful stage runs as a task and commits its own
+    state-store version in every batch, however small the batch.  On a
+    4-core box a live-bars micro-batch ran 99 tasks and ~3.8 s of
+    addBatch at the session's 32 partitions, and ~15 tasks and ~1.1 s
+    at 4.
+
+    The cap reaches the stream only: ``start()`` clones the session, and
+    the clone carries the capped value into the stateful exchanges and
+    the frames handed to foreachBatch.  The session's own value is then
+    restored, so batch queries keep their partitions and AQE coalescing.
+    The lock keeps concurrent starts from restoring each other's cap.
+
+    Spark records the value in the checkpoint's offset log at the first
+    batch and reuses it on every restart, so a checkpoint keeps the
+    state-partition count it was created with.
+    """
+    spark = writer._spark
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        session_value = spark.conf.get(key)
+        cap = min(int(session_value), spark.sparkContext.defaultParallelism)
+        spark.conf.set(key, str(cap))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, session_value)
+
+
 def fold_stream(
     stream: DataFrame,
     out_dir: str,
@@ -271,13 +309,11 @@ def fold_stream(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         _write_batch_leaves(partial_fn(batch_df), out_dir, batch_id)
 
-    (
+    start_stream(
         stream.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    ).awaitTermination()
     return stream.sparkSession.read.parquet(out_dir)
 
 

@@ -21,6 +21,7 @@ from quant_market_data_pipeline_spark.streaming.bars_stream import (
     dedup_stream,
     parquet_bar_sink,
     read_tick_stream,
+    start_stream,
     stream_bars,
 )
 
@@ -44,6 +45,12 @@ def run_live_bars(
     ``max_files_per_trigger`` splits the drain into multiple micro-batches
     (smaller state high-water marks; also how the multi-batch no-loss
     property of the sink is exercised in tests).
+
+    The stream starts through :func:`start_stream`, with one state
+    partition per core.  That count is fixed at a checkpoint's first
+    start: Spark reuses it on every restart from the checkpoint.  On a
+    cluster ``defaultParallelism`` is the executors' total cores, so
+    start a new checkpoint on the cluster size it must serve.
     """
     ticks = read_tick_stream(
         spark,
@@ -61,4 +68,4 @@ def run_live_bars(
     writer = parquet_bar_sink(bars, out_dir, checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_stream(writer)

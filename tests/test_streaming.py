@@ -596,9 +596,11 @@ def _merged(partials):
 
 def test_fold_stream_writes_one_file_per_batch_leaf(spark):
     """Each ``batch_id`` leaf a ``fold_stream`` batch writes is one
-    parquet file, however many shuffle partitions the partial spans.
-    Partition coalescing is off so the partial keeps all of them, as a
-    partial larger than the adaptive advisory size would."""
+    parquet file, although the partial spans several shuffle partitions:
+    one per core, the stream's cap (``start_stream``).  Partition
+    coalescing is off so the partial keeps all of them, as a partial
+    larger than the adaptive advisory size would."""
+    assert spark.sparkContext.defaultParallelism > 1  # else 1 file anyway
     conf = "spark.sql.adaptive.coalescePartitions.enabled"
     old = spark.conf.get(conf)
     spark.conf.set(conf, "false")
@@ -667,3 +669,155 @@ def test_fold_stream_checkpoint_replay_is_idempotent(spark):
     )
     assert len(first) == 97
     assert again == first
+
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def _state_partitions(ckpt, op=0):
+    return sum(d.isdigit() for d in os.listdir(f"{ckpt}/state/{op}"))
+
+
+def _ticks(events):
+    return events.select(
+        "event_id",
+        "ts",
+        F.col("event_type").alias("symbol"),
+        F.col("value").alias("price"),
+    )
+
+
+def _sliced_ticks(events, n):
+    """Ticks with a ``slice`` column: ``n`` equal event-time spans."""
+    ticks = _ticks(events)
+    us = F.unix_micros("ts")
+    lo, hi = ticks.agg(F.min(us), F.max(us)).first()
+    span = (hi - lo) // n + 1
+    return ticks.withColumn("slice", ((us - F.lit(lo)) / span).cast("int"))
+
+
+def _lake_bars(spark, lake):
+    cols = ["symbol", "bar_ts", "open", "high", "low", "close", "volume"]
+    return sorted(tuple(r) for r in spark.read.parquet(lake).select(cols).collect())
+
+
+def test_live_bars_new_checkpoint_has_one_state_partition_per_core(
+    spark, events
+):
+    """A fresh checkpoint gets ``min(session partitions, cores)`` state
+    partitions for both stateful stages, and the cap does not leak into
+    the session that batch queries use."""
+    from quant_market_data_pipeline_spark.streaming.bars_stream import (
+        TICK_SCHEMA,
+    )
+    from quant_market_data_pipeline_spark.streaming.pipeline import (
+        run_live_bars,
+    )
+
+    assert spark.conf.get(_SHUFFLE) == "32"
+    with tempfile.TemporaryDirectory() as tmp:
+        _ticks(events.limit(2000)).coalesce(1).write.parquet(f"{tmp}/landing")
+        q = run_live_bars(
+            spark,
+            f"{tmp}/landing",
+            f"{tmp}/lake",
+            f"{tmp}/ckpt",
+            schema=TICK_SCHEMA,
+            width="1 hour",
+            available_now=True,
+        )
+        assert spark.conf.get(_SHUFFLE) == "32"
+        q.awaitTermination(120)
+        want = min(32, spark.sparkContext.defaultParallelism)
+        assert want == 4  # the local[4] test session
+        assert _state_partitions(f"{tmp}/ckpt", 0) == want  # dedup
+        assert _state_partitions(f"{tmp}/ckpt", 1) == want  # window agg
+        assert spark.read.parquet(f"{tmp}/lake").count() > 0
+    assert spark.conf.get(_SHUFFLE) == "32"
+
+
+def test_start_stream_restarts_uncapped_checkpoint(spark, events):
+    """A checkpoint started by a plain ``writer.start()`` at the
+    session's 32 partitions, restarted through ``start_stream``, keeps
+    its 32 state partitions (Spark reuses the value in the offset log),
+    and the lake ends with the bars of one uninterrupted drain."""
+    from quant_market_data_pipeline_spark.queries.streaming_e2e import (
+        _land_sliced,
+    )
+    from quant_market_data_pipeline_spark.streaming.bars_stream import (
+        TICK_SCHEMA,
+        dedup_stream,
+        parquet_bar_sink,
+        stream_bars,
+    )
+    from quant_market_data_pipeline_spark.streaming.pipeline import (
+        run_live_bars,
+    )
+
+    sliced = _sliced_ticks(events, 4)
+    with tempfile.TemporaryDirectory() as tmp:
+        landing, lake, ckpt = f"{tmp}/landing", f"{tmp}/lake", f"{tmp}/ckpt"
+        # first start: the chain run_live_bars wires, started plainly,
+        # over the first two slices
+        _land_sliced(sliced.filter("slice < 2"), "slice", landing, 2)
+        ticks = read_tick_stream(
+            spark, landing, TICK_SCHEMA, fmt="parquet", max_files_per_trigger=1
+        )
+        bars = stream_bars(
+            dedup_stream(ticks, keys=["symbol", "event_id"]),
+            width="1 hour",
+            watermark_delay=None,
+        )
+        q = (
+            parquet_bar_sink(bars, lake, ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        assert _state_partitions(ckpt) == 32
+        assert spark.read.parquet(lake).count() > 0  # >= 1 data batch
+
+        # restart through start_stream after the last two slices land
+        _land_sliced(
+            sliced.filter("slice >= 2").withColumn("slice", F.col("slice") - 2),
+            "slice",
+            landing,
+            2,
+        )
+        q = run_live_bars(
+            spark, landing, lake, ckpt, schema=TICK_SCHEMA, width="1 hour",
+            available_now=True, max_files_per_trigger=1,
+        )
+        q.awaitTermination(180)
+        assert _state_partitions(ckpt) == 32
+        assert _state_partitions(ckpt, 1) == 32
+        resumed = _lake_bars(spark, lake)
+
+        # the same four slices in one uninterrupted drain
+        _land_sliced(sliced, "slice", f"{tmp}/landing_all", 4)
+        q = run_live_bars(
+            spark, f"{tmp}/landing_all", f"{tmp}/lake_all", f"{tmp}/ckpt_all",
+            schema=TICK_SCHEMA, width="1 hour",
+            available_now=True, max_files_per_trigger=1,
+        )
+        q.awaitTermination(180)
+        uninterrupted = _lake_bars(spark, f"{tmp}/lake_all")
+    assert len(uninterrupted) > 0
+    assert resumed == uninterrupted
+
+
+def test_engine_streams_start_only_through_start_stream():
+    """One place decides how engine streams are partitioned: the only
+    ``.start()`` call in the package is the one inside ``start_stream``."""
+    from pathlib import Path
+
+    import quant_market_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    sites = [
+        (str(p.relative_to(root)), line.strip())
+        for p in sorted(root.rglob("*.py"))
+        for line in p.read_text().splitlines()
+        if ".start()" in line
+    ]
+    assert sites == [("streaming/bars_stream.py", "return writer.start()")]
