@@ -872,6 +872,8 @@ def ivf_topk(
 PQ_M = 4  # subspaces
 PQ_SUB = 16  # dims per subspace
 PQ_K = 16  # codebook entries per subspace
+EMB_DIM = 64  # embedding width: every vector kernel assumes exactly this
+assert PQ_M * PQ_SUB == EMB_DIM
 
 
 def l2_sq(
@@ -892,9 +894,12 @@ def l2_sq(
     million-pair sites pass ``dim`` — small-volume sites (PQ encode
     legs, 20-query exact legs, the Lloyd training loop, which re-plans
     per iteration) measured net-slower unrolled and keep the fold.
+    The A/B method and the per-query numbers are in OPTIMIZATION_r15.md.
     Caller contract: the arrays are EXACTLY ``dim`` wide — a shorter
     array yields NULL here (out-of-range get) where the fold would
-    return a partial sum."""
+    return a partial sum.  The recall audits meet it through their one
+    ``vecs`` frame (queries/llm.py ``_vecs``), which raises at execution
+    on any embedding whose size is not ``EMB_DIM``."""
     if dim is not None:
         acc: Column = F.lit(0.0)
         for i in range(dim):

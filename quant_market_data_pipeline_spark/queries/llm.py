@@ -9,6 +9,8 @@ deterministic and oracle-checkable (see llm/hashing.py; re-exported by the funct
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -28,9 +30,16 @@ from quant_market_data_pipeline_spark.llm.hashing import (
     word_tokens,
 )
 from quant_market_data_pipeline_spark.llm.similarity import (
+    EMB_DIM,
+    as_double,
     blocked_neardup_pairs,
     cosine_topk,
+    l2_sq,
     lsh_cosine_topk,
+    pq_codebooks,
+    pq_encode,
+    pq_subvectors,
+    pq_train_codebooks,
 )
 from quant_market_data_pipeline_spark.llm.text import (
     normalized_text,
@@ -926,7 +935,7 @@ SELECT query_id, neighbor_id, bucket, cos_sim, rn FROM ranked WHERE rn <= 3
 )
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings(spark, sf_dir)
-    return lsh_cosine_topk(emb, dim=64, k=3, neighbor_cap=_LSH_CAP)
+    return lsh_cosine_topk(emb, dim=EMB_DIM, k=3, neighbor_cap=_LSH_CAP)
 
 
 # 4 independent tables x adaptive planes (table t = global plane
@@ -1014,7 +1023,7 @@ def q_ann_lsh_mt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_multitable_topk(
         emb,
         tables=_MT_TABLES,
-        dim=64,
+        dim=EMB_DIM,
         k=3,
         neighbor_cap=_LSH_CAP,
     )
@@ -1134,7 +1143,7 @@ def q_ann_lsh_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings(spark, sf_dir)
     return lsh_multiprobe_topk(
         emb,
-        dim=64,
+        dim=EMB_DIM,
         k=3,
         n_flip=_MP_FLIPS,
         neighbor_cap=_LSH_CAP,
@@ -3819,22 +3828,8 @@ GROUP BY e.query_id
 )
 def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings(spark, sf_dir)
-    sample = emb.filter(F.col("vec_id") < 20)
-    exact = cosine_topk(sample, emb, k=3).select("query_id", "neighbor_id")
-    approx = (
-        lsh_cosine_topk(emb, dim=64, k=3, neighbor_cap=_LSH_CAP)
-        .filter(F.col("query_id") < 20)
-        .select("query_id", "neighbor_id", F.lit(1).alias("hit"))
-    )
-    j = exact.join(
-        F.broadcast(approx), ["query_id", "neighbor_id"], "left"
-    )
-    return j.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-        F.count("hit").cast("bigint").alias("n_hit"),
-        F.round(
-            F.count("hit").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_at_3"),
+    return _cosine_recall_audit(
+        emb, lsh_cosine_topk(emb, dim=EMB_DIM, k=3, neighbor_cap=_LSH_CAP)
     )
 
 
@@ -3863,22 +3858,251 @@ GROUP BY e.query_id
 """
 
 
-def _recall_audit_frame(exact: DataFrame, approx: DataFrame) -> DataFrame:
-    j = exact.join(
-        F.broadcast(
-            approx.filter(F.col("query_id") < 20).select(
-                "query_id", "neighbor_id", F.lit(1).alias("hit")
+# --- recall-audit harness ---------------------------------------------------
+# Every vector *_recall_audit has one shape: candidate generation by an
+# approximate index, exact refinement on the fixed 20-query sample
+# (vec_id < 20), and recall@3 against the exact top-3 over the whole
+# corpus.  Only the candidate generator differs per audit; the parts
+# below are shared, and recall_audit shapes every output.
+_AUDIT_Q = 20  # the query sample: vec_id < _AUDIT_Q
+_AUDIT_K = 3  # recall@k
+
+
+def _vecs(emb: DataFrame) -> DataFrame:
+    """(vec_id, v): the raw vectors as doubles.  Raises at execution on
+    an embedding whose size is not EMB_DIM (or is NULL): such a vector
+    would otherwise get NULL distances, which sort first."""
+    e = F.col("embedding")
+    return emb.select(
+        "vec_id",
+        F.when(F.size(e) == EMB_DIM, as_double(e))
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"embedding size is not EMB_DIM={EMB_DIM}: vec_id "),
+                    F.col("vec_id").cast("string"),
+                )
             )
-        ),
-        ["query_id", "neighbor_id"],
-        "left",
+        )
+        .alias("v"),
     )
-    return j.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-        F.count("hit").cast("bigint").alias("n_hit"),
-        F.round(
-            F.count("hit").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_at_3"),
+
+
+def _sample(frame: DataFrame, *cols) -> DataFrame:
+    """The query sample of ``frame`` (vec_id < 20), keyed query_id."""
+    return frame.filter(F.col("vec_id") < _AUDIT_Q).select(
+        F.col("vec_id").alias("query_id"), *cols
+    )
+
+
+def _ranked(scored: DataFrame, key: str) -> DataFrame:
+    """Adds ``rn``: the per-query rank by (key, neighbor_id)."""
+    w = Window.partitionBy("query_id").orderBy(key, "neighbor_id")
+    return scored.withColumn("rn", F.row_number().over(w))
+
+
+def _topk(ranked: DataFrame, k: int = _AUDIT_K) -> DataFrame:
+    return ranked.filter(F.col("rn") <= k).select("query_id", "neighbor_id")
+
+
+def _l2_topk(corpus: DataFrame, qv: DataFrame, col: str = "v") -> DataFrame:
+    """Exact L2 top-3 of the broadcast sample ``qv`` (query_id, qv) over
+    every ``col`` vector of ``corpus``: a nested loop of 20 queries."""
+    scored = (
+        corpus.crossJoin(F.broadcast(qv))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            l2_sq(F.col("qv"), F.col(col)).alias("d2"),
+        )
+    )
+    return _topk(_ranked(scored, "d2"))
+
+
+def _rerank(cand: DataFrame, vecs: DataFrame, qv: DataFrame) -> DataFrame:
+    """Exact L2 top-3 over candidate pairs: raw vectors are fetched for
+    the candidates only (output-sized joins), never for the corpus."""
+    scored = (
+        cand.select("query_id", "neighbor_id")
+        .join(F.broadcast(qv), "query_id")
+        .join(
+            vecs.select(
+                F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv")
+            ),
+            "neighbor_id",
+        )
+        .select(
+            "query_id",
+            "neighbor_id",
+            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
+        )
+    )
+    return _topk(_ranked(scored, "d2"))
+
+
+def _adc_ranked(
+    codes: DataFrame, cb: DataFrame, q: DataFrame, cand: DataFrame | None = None
+) -> DataFrame:
+    """ADC distances ranked per query (``rn`` by adist).  The lookup
+    table is the sample's subvectors ``q`` (query_id, [cell,] m, sv)
+    against the broadcast codebooks ``cb``; a neighbor's distance sums
+    its ``codes`` (a pq_encode frame) over that table in an integer-keyed
+    join, never touching floats.  Without ``cand`` every code is
+    scanned; with it only the candidate pairs, matched on every table
+    key."""
+    keys = [c for c in q.columns if c != "sv"]
+    lut = q.join(F.broadcast(cb), "m").select(
+        *keys, "cid", l2_sq(F.col("sv"), F.col("cv")).alias("d2")
+    )
+    if cand is None:
+        adc = (
+            codes.select("vec_id", "m", "cid")
+            .join(F.broadcast(lut), ["m", "cid"])
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        )
+    else:
+        adc = (
+            cand.join(
+                codes.select(F.col("vec_id").alias("neighbor_id"), "m", "cid"),
+                "neighbor_id",
+            )
+            .join(F.broadcast(lut), [*keys, "cid"])
+            .groupBy("query_id", "neighbor_id")
+        )
+    return _ranked(adc.agg(F.round(F.sum("d2"), 6).alias("adist")), "adist")
+
+
+def _n_cells(n: int) -> int:
+    """greatest(32, ceil(sqrt(n))): the FAISS cells~sqrt(n) law, in
+    integers so it equals the oracle's nconf exactly."""
+    c = math.isqrt(n)
+    return max(32, c if c * c == n else c + 1)
+
+
+def _ivf_cents(vecs: DataFrame, n_cells: int) -> DataFrame:
+    """(ccid, ccv): the first ``n_cells`` vectors by id as centroids."""
+    return vecs.filter(F.col("vec_id") < n_cells).select(
+        F.col("vec_id").alias("ccid"), F.col("v").alias("ccv")
+    )
+
+
+def _ivf_probe(
+    vecs: DataFrame,
+    cents: DataFrame,
+    upto: int = _IVF_PROBE,
+    keep_cd2: bool = False,
+) -> DataFrame:
+    """(vec_id, cell, [cd2,] probe_rank): each vector's ``upto`` nearest
+    centroids by (cd2, ccid).  This corpus x cells cross join is the
+    one site where l2_sq is unrolled (see its docstring)."""
+    scored = vecs.crossJoin(F.broadcast(cents)).select(
+        "vec_id",
+        "ccid",
+        l2_sq(F.col("v"), F.col("ccv"), dim=EMB_DIM).alias("cd2"),
+    )
+    w = Window.partitionBy("vec_id").orderBy("cd2", "ccid")
+    return (
+        scored.withColumn("probe_rank", F.row_number().over(w))
+        .filter(F.col("probe_rank") <= upto)
+        .select(
+            "vec_id",
+            F.col("ccid").alias("cell"),
+            *(["cd2"] if keep_cd2 else []),
+            "probe_rank",
+        )
+    )
+
+
+def _ivf_candidates(
+    probed: DataFrame, assign: DataFrame | None = None
+) -> DataFrame:
+    """(query_id, neighbor_id, cell): each sampled query's probed cells
+    joined to the vectors ``assign`` (vec_id, cell) places in them; by
+    default each vector lives in its nearest cell."""
+    if assign is None:
+        assign = probed.filter(F.col("probe_rank") == 1)
+    return (
+        _sample(probed, "cell")
+        .join(
+            assign.select(F.col("vec_id").alias("neighbor_id"), "cell"),
+            "cell",
+        )
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", "cell")
+    )
+
+
+def recall_audit(
+    exact: DataFrame,
+    legs: list[tuple[str, str, DataFrame]],
+    n_cand: DataFrame | None = None,
+) -> DataFrame:
+    """Per-query recall@3 of each approximate leg against ``exact``.
+
+    ``legs`` is an ordered list of (n_hit column, recall column, approx
+    frame of (query_id, neighbor_id)).  The output is query_id,
+    [n_cand,] n_exact, the n_hit columns, then the recall columns, in
+    leg order.  ``n_cand``, a candidate-pair frame, adds each query's
+    candidate count (0 when it has none).  Every join is broadcast: an
+    approx side holds at most sample x k rows."""
+    j = exact
+    hits = []
+    for n_hit, recall, approx in legs:
+        hit = "hit" + n_hit[len("n_hit"):]
+        hits.append((hit, n_hit, recall))
+        j = j.join(
+            F.broadcast(
+                approx.select("query_id", "neighbor_id", F.lit(1).alias(hit))
+            ),
+            ["query_id", "neighbor_id"],
+            "left",
+        )
+    keys = ["query_id"]
+    if n_cand is not None:
+        counts = n_cand.groupBy("query_id").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_cand")
+        )
+        j = j.join(F.broadcast(counts), "query_id", "left")
+        keys.append("n_cand")
+    n = F.count(F.lit(1))
+    out = j.groupBy(*keys).agg(
+        n.cast("bigint").alias("n_exact"),
+        *[F.count(h).cast("bigint").alias(c) for h, c, _ in hits],
+        *[F.round(F.count(h).cast("double") / n, 6).alias(r) for h, _, r in hits],
+    )
+    if n_cand is None:
+        return out
+    return out.withColumn(
+        "n_cand", F.coalesce(F.col("n_cand"), F.lit(0).cast("bigint"))
+    )
+
+
+def _with_n_cells(out: DataFrame, n_cells: int) -> DataFrame:
+    """Adds the index's cell count as the column after query_id."""
+    return out.select(
+        "query_id",
+        F.lit(n_cells).cast("bigint").alias("n_cells"),
+        *out.columns[1:],
+    )
+
+
+def _cosine_recall_audit(emb: DataFrame, approx: DataFrame) -> DataFrame:
+    """The cosine audits: exact cosine top-3 of the sample (cosine_topk,
+    a nested loop of 20 queries) against an index's all-pairs top-3."""
+    exact = cosine_topk(
+        emb.filter(F.col("vec_id") < _AUDIT_Q), emb, k=_AUDIT_K
+    ).select("query_id", "neighbor_id")
+    return recall_audit(
+        exact,
+        [
+            (
+                "n_hit",
+                "recall_at_3",
+                approx.filter(F.col("query_id") < _AUDIT_Q),
+            )
+        ],
     )
 
 
@@ -4033,113 +4257,23 @@ GROUP BY e.query_id
     "re-rank join.",
 )
 def q_pq_adc_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        l2_sq,
-        pq_codebooks,
-        pq_encode,
-        pq_subvectors,
-    )
-
     emb = _embeddings(spark, sf_dir)
     sub = pq_subvectors(emb)
     cb = pq_codebooks(emb)
-    codes = pq_encode(sub, cb).select("vec_id", "m", "cid")
-    q = sub.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), "m", "sv"
-    )
-    qd = q.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "m",
-        "cid",
-        l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-    )
-    adc = (
-        codes.join(F.broadcast(qd), ["m", "cid"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.round(F.sum("d2"), 6).alias("adist"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    cand = adc.withColumn("rn", F.row_number().over(wq))
-    approx_adc = cand.filter(F.col("rn") <= 3).select(
-        "query_id", "neighbor_id"
-    )
-    from quant_market_data_pipeline_spark.llm.similarity import as_double
-
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    # stage 2: exact re-rank of the ADC top-32 — raw floats fetched for
-    # 32 candidates per query (output-sized joins), never the corpus
-    reranked = (
-        cand.filter(F.col("rn") <= 32)
-        .select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
+    cand = _adc_ranked(pq_encode(sub, cb), cb, _sample(sub, "m", "sv"))
+    vecs = _vecs(emb)
+    qv = _sample(vecs, F.col("v").alias("qv"))
+    # stage 2: exact re-rank of the ADC top-32
+    return recall_audit(
+        _l2_topk(vecs, qv),
+        [
+            ("n_hit_adc", "recall_adc", _topk(cand)),
+            (
+                "n_hit_reranked",
+                "recall_reranked",
+                _rerank(cand.filter(F.col("rn") <= 32), vecs, qv),
             ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx_rr = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    j = (
-        exact.join(
-            F.broadcast(
-                approx_adc.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_adc")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx_rr.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_rr")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-    )
-    return j.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-        F.count("hit_adc").cast("bigint").alias("n_hit_adc"),
-        F.count("hit_rr").cast("bigint").alias("n_hit_reranked"),
-        F.round(
-            F.count("hit_adc").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_adc"),
-        F.round(
-            F.count("hit_rr").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_reranked"),
+        ],
     )
 
 
@@ -4311,135 +4445,26 @@ GROUP BY e.query_id
     "integer-keyed against broadcast query tables.",
 )
 def q_pq_trained_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        pq_codebooks,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
-
     emb = _embeddings(spark, sf_dir)
     sub = materialize_corpus(pq_subvectors(emb))
     cb_seed = pq_codebooks(emb)
     cb_tr = pq_train_codebooks(emb)
-    codes_b = pq_encode(sub, cb_seed).select("vec_id", "m", "cid")
-    codes_t = pq_encode(sub, cb_tr).select("vec_id", "m", "cid")
-    q = sub.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), "m", "sv"
-    )
-
-    def adc_ranked(codes: DataFrame, cb: DataFrame) -> DataFrame:
-        qd = q.join(F.broadcast(cb), "m").select(
-            "query_id",
-            "m",
-            "cid",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-        adc = (
-            codes.join(F.broadcast(qd), ["m", "cid"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-            .agg(F.round(F.sum("d2"), 6).alias("adist"))
-        )
-        w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-        return adc.withColumn("rn", F.row_number().over(w))
-
-    approx_b = (
-        adc_ranked(codes_b, cb_seed)
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    candt = adc_ranked(codes_t, cb_tr)
-    approx_t = candt.filter(F.col("rn") <= 3).select(
-        "query_id", "neighbor_id"
-    )
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    reranked = (
-        candt.filter(F.col("rn") <= 32)
-        .select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
+    q = _sample(sub, "m", "sv")
+    cand_b = _adc_ranked(pq_encode(sub, cb_seed), cb_seed, q)
+    cand_t = _adc_ranked(pq_encode(sub, cb_tr), cb_tr, q)
+    vecs = _vecs(emb)
+    qv = _sample(vecs, F.col("v").alias("qv"))
+    return recall_audit(
+        _l2_topk(vecs, qv),
+        [
+            ("n_hit_adc_base", "recall_adc_base", _topk(cand_b)),
+            ("n_hit_adc_trained", "recall_adc_trained", _topk(cand_t)),
+            (
+                "n_hit_rr_trained",
+                "recall_rr_trained",
+                _rerank(cand_t.filter(F.col("rn") <= 32), vecs, qv),
             ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx_rr = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    j = (
-        exact.join(
-            F.broadcast(
-                approx_b.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_b")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx_t.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_t")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx_rr.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_rr")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-    )
-    return j.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-        F.count("hit_b").cast("bigint").alias("n_hit_adc_base"),
-        F.count("hit_t").cast("bigint").alias("n_hit_adc_trained"),
-        F.count("hit_rr").cast("bigint").alias("n_hit_rr_trained"),
-        F.round(
-            F.count("hit_b").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_adc_base"),
-        F.round(
-            F.count("hit_t").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_adc_trained"),
-        F.round(
-            F.count("hit_rr").cast("double") / F.count(F.lit(1)), 6
-        ).alias("recall_rr_trained"),
+        ],
     )
 
 
@@ -4606,136 +4631,24 @@ GROUP BY e.query_id, nc.n_cand
     "re-rank candidates per query.",
 )
 def q_ann_ivfpq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        pq_codebooks,
-        pq_encode,
-        pq_subvectors,
-    )
-
     emb = _embeddings(spark, sf_dir)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    cents = vecs.filter(F.col("vec_id") < _IVF_CELLS).select(
-        F.col("vec_id").alias("ccid"), F.col("v").alias("ccv")
-    )
-    cscored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "ccid", l2_sq(F.col("v"), F.col("ccv"), dim=64).alias("cd2")
-    )
-    wp = Window.partitionBy("vec_id").orderBy("cd2", "ccid")
-    probed = materialize_corpus(
-        cscored.withColumn("probe_rank", F.row_number().over(wp))
-        .filter(F.col("probe_rank") <= _IVF_PROBE)
-        .select("vec_id", F.col("ccid").alias("cell"), "probe_rank")
-    )
-    candset = (
-        probed.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(
-            probed.filter(F.col("probe_rank") == 1).select(
-                F.col("vec_id").alias("neighbor_id"), "cell"
-            ),
-            "cell",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
+    vecs = _vecs(emb)
+    probed = materialize_corpus(_ivf_probe(vecs, _ivf_cents(vecs, _IVF_CELLS)))
+    cands = _ivf_candidates(probed)
     sub = pq_subvectors(emb)
     cb = pq_codebooks(emb)
-    codes = pq_encode(sub, cb).select(
-        F.col("vec_id").alias("neighbor_id"), "m", "cid"
-    )
-    qd = (
-        sub.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "m", "sv")
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id",
-            "m",
-            "cid",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-    )
-    adc = (
-        candset.join(codes, "neighbor_id")
-        .join(F.broadcast(qd), ["query_id", "m", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("d2"), 6).alias("adist"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    cand = adc.withColumn("rn", F.row_number().over(wq))
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    reranked = (
-        cand.filter(F.col("rn") <= 32)
-        .select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    ncand = candset.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(F.broadcast(ncand), "query_id", "left")
-        .groupBy("query_id", "n_cand")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_cand"), F.lit(0).cast("bigint")).alias(
-                "n_cand"
-            ),
-            "n_exact",
-            "n_hit",
-            "recall_at_3",
-        )
+    cand = _adc_ranked(pq_encode(sub, cb), cb, _sample(sub, "m", "sv"), cands)
+    qv = _sample(vecs, F.col("v").alias("qv"))
+    return recall_audit(
+        _l2_topk(vecs, qv),
+        [
+            (
+                "n_hit",
+                "recall_at_3",
+                _rerank(cand.filter(F.col("rn") <= 32), vecs, qv),
+            )
+        ],
+        n_cand=cands,
     )
 
 
@@ -4879,164 +4792,35 @@ GROUP BY e.query_id, nc.n_cand
 def q_ann_ivfpq_adaptive_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import math
-
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
-
     emb = _embeddings(spark, sf_dir)
     # index-build action: the corpus count sets the cell count (the
     # cells~sqrt(n) law, data-derived exactly like the oracle's nconf)
-    n = emb.count()
-    c = math.isqrt(n)
-    n_cells = max(32, c if c * c == n else c + 1)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    cents = vecs.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("ccid"), F.col("v").alias("ccv")
-    )
-    cscored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "ccid", l2_sq(F.col("v"), F.col("ccv"), dim=64).alias("cd2")
-    )
-    wp = Window.partitionBy("vec_id").orderBy("cd2", "ccid")
-    probed = materialize_corpus(
-        cscored.withColumn("probe_rank", F.row_number().over(wp))
-        .filter(F.col("probe_rank") <= _IVF_PROBE)
-        .select("vec_id", F.col("ccid").alias("cell"), "probe_rank")
-    )
-    candset = (
-        probed.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(
-            probed.filter(F.col("probe_rank") == 1).select(
-                F.col("vec_id").alias("neighbor_id"), "cell"
-            ),
-            "cell",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
+    n_cells = _n_cells(emb.count())
+    vecs = _vecs(emb)
+    probed = materialize_corpus(_ivf_probe(vecs, _ivf_cents(vecs, n_cells)))
+    cands = _ivf_candidates(probed)
     sub = pq_subvectors(emb)
     cb = pq_train_codebooks(emb)
-    codes = pq_encode(sub, cb).select(
-        F.col("vec_id").alias("neighbor_id"), "m", "cid"
-    )
-    qd = (
-        sub.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "m", "sv")
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id",
-            "m",
-            "cid",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-    )
-    adc = (
-        candset.join(codes, "neighbor_id")
-        .join(F.broadcast(qd), ["query_id", "m", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("d2"), 6).alias("adist"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    approx_adc = (
-        adc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    qv = _sample(vecs, F.col("v").alias("qv"))
     # refine cap = n_cand: the whole bounded candidate set is re-ranked
     # (raw vectors fetched at candidate-set size, ~2*sqrt(n) per query)
-    reranked = (
-        candset.join(F.broadcast(qv), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
+    out = recall_audit(
+        _l2_topk(vecs, qv),
+        [
+            (
+                "n_hit_adc",
+                "recall_adc",
+                _topk(
+                    _adc_ranked(
+                        pq_encode(sub, cb), cb, _sample(sub, "m", "sv"), cands
+                    )
+                ),
             ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
+            ("n_hit", "recall_at_3", _rerank(cands, vecs, qv)),
+        ],
+        n_cand=cands,
     )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    ncand = candset.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx_adc.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_adc")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(F.broadcast(ncand), "query_id", "left")
-        .groupBy("query_id", "n_cand")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit_adc").cast("bigint").alias("n_hit_adc"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-            F.round(
-                F.count("hit_adc").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_adc"),
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .select(
-            "query_id",
-            F.lit(n_cells).cast("bigint").alias("n_cells"),
-            F.coalesce(F.col("n_cand"), F.lit(0).cast("bigint")).alias(
-                "n_cand"
-            ),
-            "n_exact",
-            "n_hit_adc",
-            "n_hit",
-            "recall_adc",
-            "recall_at_3",
-        )
-    )
+    return _with_n_cells(out, n_cells)
 
 
 # --- residual PQ / IVFADC proper (r13, second half) ------------------------
@@ -5105,36 +4889,14 @@ _RES_CODES_CTE = f"""{_RES_CELLS_CTE}{
 
 
 def _residual_spark_parts(spark: SparkSession, sf_dir: str):
-    """Shared Spark construction: (vecs, cents, probed, residual frame,
+    """Shared Spark construction: (n_cells, vecs, cents, probed,
     trained residual codebooks, residual codes with d2) — the engine
     twin of _RES_CODES_CTE."""
-    import math
-
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
-
     emb = _embeddings(spark, sf_dir)
-    n = emb.count()
-    c = math.isqrt(n)
-    n_cells = max(32, c if c * c == n else c + 1)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    cents = vecs.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("ccid"), F.col("v").alias("ccv")
-    )
-    cscored = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "ccid", l2_sq(F.col("v"), F.col("ccv"), dim=64).alias("cd2")
-    )
-    wp = Window.partitionBy("vec_id").orderBy("cd2", "ccid")
-    probed = materialize_corpus(
-        cscored.withColumn("probe_rank", F.row_number().over(wp))
-        .filter(F.col("probe_rank") <= _IVF_PROBE)
-        .select("vec_id", F.col("ccid").alias("cell"), "probe_rank")
-    )
+    n_cells = _n_cells(emb.count())
+    vecs = _vecs(emb)
+    cents = _ivf_cents(vecs, n_cells)
+    probed = materialize_corpus(_ivf_probe(vecs, cents))
     assign = probed.filter(F.col("probe_rank") == 1).select(
         "vec_id", "cell"
     )
@@ -5151,7 +4913,7 @@ def _residual_spark_parts(spark: SparkSession, sf_dir: str):
     )
     rcb = pq_train_codebooks(res, vec_col="v")
     rcodes = pq_encode(pq_subvectors(res, vec_col="v"), rcb)
-    return n_cells, vecs, cents, probed, res, rcb, rcodes
+    return n_cells, vecs, cents, probed, rcb, rcodes
 
 
 @register(
@@ -5326,24 +5088,15 @@ GROUP BY e.query_id, nc.n_cand
 def q_ann_ivfpq_residual_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import l2_sq
-
-    (
-        n_cells,
-        vecs,
-        cents,
-        probed,
-        res,
-        rcb,
-        rcodes,
-    ) = _residual_spark_parts(spark, sf_dir)
-    q = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    n_cells, vecs, cents, probed, rcb, rcodes = _residual_spark_parts(
+        spark, sf_dir
     )
+    qv = _sample(vecs, F.col("v").alias("qv"))
+    # one lookup table per (query, probed cell): the query's residual
+    # against that cell's centroid, split into its M subvectors
     qres = (
-        probed.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(F.broadcast(q), "query_id")
+        _sample(probed, "cell")
+        .join(F.broadcast(qv), "query_id")
         .join(F.broadcast(cents), F.col("cell") == F.col("ccid"))
         .select(
             "query_id",
@@ -5369,127 +5122,20 @@ def q_ann_ivfpq_residual_recall_audit(
         "query_id", "cell", F.col("__s.m").alias("m"),
         F.col("__s.sv").alias("sv"),
     )
-    lut = qrsub.join(F.broadcast(rcb), "m").select(
-        "query_id",
-        "cell",
-        "m",
-        "cid",
-        l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-    )
-    candset = (
-        probed.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(
-            probed.filter(F.col("probe_rank") == 1).select(
-                F.col("vec_id").alias("neighbor_id"), "cell"
+    cands = _ivf_candidates(probed)
+    out = recall_audit(
+        _l2_topk(vecs, qv),
+        [
+            (
+                "n_hit_adc",
+                "recall_adc",
+                _topk(_adc_ranked(rcodes, rcb, qrsub, cands)),
             ),
-            "cell",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", "cell")
+            ("n_hit", "recall_at_3", _rerank(cands, vecs, qv)),
+        ],
+        n_cand=cands,
     )
-    adc = (
-        candset.join(
-            rcodes.select(
-                F.col("vec_id").alias("neighbor_id"), "m", "cid"
-            ),
-            "neighbor_id",
-        )
-        .join(F.broadcast(lut), ["query_id", "cell", "m", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("d2"), 6).alias("adist"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    approx_adc = (
-        adc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    reranked = (
-        candset.select("query_id", "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    ncand = candset.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx_adc.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_adc")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(F.broadcast(ncand), "query_id", "left")
-        .groupBy("query_id", "n_cand")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit_adc").cast("bigint").alias("n_hit_adc"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-            F.round(
-                F.count("hit_adc").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_adc"),
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .select(
-            "query_id",
-            F.lit(n_cells).cast("bigint").alias("n_cells"),
-            F.coalesce(F.col("n_cand"), F.lit(0).cast("bigint")).alias(
-                "n_cand"
-            ),
-            "n_exact",
-            "n_hit_adc",
-            "n_hit",
-            "recall_adc",
-            "recall_at_3",
-        )
-    )
+    return _with_n_cells(out, n_cells)
 
 
 # --- SQ8 scalar quantization (r13): the third memory tier ------------------
@@ -5593,15 +5239,12 @@ GROUP BY e.query_id
 )
 def q_sq8_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
         sq8_codes,
         sq8_dim_stats,
         sq8_recon,
     )
 
-    emb = _embeddings(spark, sf_dir)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    vecs = _vecs(_embeddings(spark, sf_dir))
     # per-dimension min/max: one map-side agg collected at 64 rows and
     # re-literalized (the broadcast dimension-stats frame); encode and
     # reconstruct are the SHARED single-definition map passes
@@ -5613,62 +5256,11 @@ def q_sq8_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(l2_sq(F.col("v"), F.col("rv")).alias("e2"))
         .agg(F.round(F.avg("e2"), 6).alias("avg_recon_err"))
     )
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    approx_scored = (
-        recon.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("rv")).alias("d2"),
-        )
-    )
-    wa = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx = (
-        approx_scored.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .crossJoin(F.broadcast(rerr))
-        .select(
-            "query_id", "n_exact", "n_hit", "recall_at_3", "avg_recon_err"
-        )
-    )
+    qv = _sample(vecs, F.col("v").alias("qv"))
+    return recall_audit(
+        _l2_topk(vecs, qv),
+        [("n_hit", "recall_at_3", _l2_topk(recon, qv, "rv"))],
+    ).crossJoin(F.broadcast(rerr))
 
 
 @register(
@@ -5703,16 +5295,12 @@ def q_ann_mt_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _embeddings(spark, sf_dir)
-    sample = emb.filter(F.col("vec_id") < 20)
-    exact = cosine_topk(sample, emb, k=3).select("query_id", "neighbor_id")
-    approx = lsh_multitable_topk(
+    return _cosine_recall_audit(
         emb,
-        tables=_MT_TABLES,
-        dim=64,
-        k=3,
-        neighbor_cap=_LSH_CAP,
+        lsh_multitable_topk(
+            emb, tables=_MT_TABLES, dim=EMB_DIM, k=3, neighbor_cap=_LSH_CAP
+        ),
     )
-    return _recall_audit_frame(exact, approx)
 
 
 @register(
@@ -5743,17 +5331,17 @@ def q_ann_mp_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _embeddings(spark, sf_dir)
-    sample = emb.filter(F.col("vec_id") < 20)
-    exact = cosine_topk(sample, emb, k=3).select("query_id", "neighbor_id")
-    approx = lsh_multiprobe_topk(
+    return _cosine_recall_audit(
         emb,
-        dim=64,
-        k=3,
-        n_flip=_MP_FLIPS,
-        neighbor_cap=_LSH_CAP,
-        target_pop=_MP_TARGET,
+        lsh_multiprobe_topk(
+            emb,
+            dim=EMB_DIM,
+            k=3,
+            n_flip=_MP_FLIPS,
+            neighbor_cap=_LSH_CAP,
+            target_pop=_MP_TARGET,
+        ),
     )
-    return _recall_audit_frame(exact, approx)
 
 
 @register(
@@ -5804,16 +5392,16 @@ def q_ann_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quant_market_data_pipeline_spark.llm.similarity import ivf_topk
 
     emb = _embeddings(spark, sf_dir)
-    sample = emb.filter(F.col("vec_id") < 20)
-    exact = cosine_topk(sample, emb, k=3).select("query_id", "neighbor_id")
-    approx = ivf_topk(
+    return _cosine_recall_audit(
         emb,
-        n_centroids=_IVF_CELLS,
-        query_pred=F.col("query_id") < 20,
-        k=3,
-        n_probe=_IVF_PROBE,
+        ivf_topk(
+            emb,
+            n_centroids=_IVF_CELLS,
+            query_pred=F.col("query_id") < _AUDIT_Q,
+            k=3,
+            n_probe=_IVF_PROBE,
+        ),
     )
-    return _recall_audit_frame(exact, approx)
 
 
 # ---------------------------------------------------------------------------
@@ -6642,42 +6230,17 @@ GROUP BY e.query_id, nc.n_cand, sk.skew_id_sliced, sk.skew_trained,
 def q_ann_ivfpq_trained_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import math
-
     from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
         ivf_train_centroids,
-        l2_sq,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
     )
 
     emb = _embeddings(spark, sf_dir)
     n = emb.count()
-    c = math.isqrt(n)
-    n_cells = max(32, c if c * c == n else c + 1)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    cents_id = vecs.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("ccid"), F.col("v").alias("ccv")
-    )
+    n_cells = _n_cells(n)
+    vecs = _vecs(emb)
     cents_tr = ivf_train_centroids(emb, n_cells, vec_col="embedding")
-
-    def _assign_rank(cents: DataFrame, upto: int) -> DataFrame:
-        scored = vecs.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "ccid", l2_sq(F.col("v"), F.col("ccv"), dim=64).alias("cd2")
-        )
-        wp = Window.partitionBy("vec_id").orderBy("cd2", "ccid")
-        return (
-            scored.withColumn("probe_rank", F.row_number().over(wp))
-            .filter(F.col("probe_rank") <= upto)
-            .select(
-                "vec_id", F.col("ccid").alias("cell"), "cd2", "probe_rank"
-            )
-        )
-
-    assign_id = _assign_rank(cents_id, 1)
-    probed = materialize_corpus(_assign_rank(cents_tr, _IVF_PROBE))
+    assign_id = _ivf_probe(vecs, _ivf_cents(vecs, n_cells), 1, keep_cd2=True)
+    probed = materialize_corpus(_ivf_probe(vecs, cents_tr, keep_cd2=True))
     # capped-overflow assignment (the index's skew bound): within each
     # cell the cap closest vectors stay; the overflow moves ONE hop to
     # its second-nearest cell — a deterministic (cd2, vec_id) ranking,
@@ -6700,16 +6263,16 @@ def q_ann_ivfpq_trained_recall_audit(
         )
     )
 
-    def _max_pop(assign: DataFrame) -> DataFrame:
-        return assign.groupBy("cell").count().agg(
-            F.max("count").alias("max_pop")
-        )
-
-    def _skew(frame: DataFrame, alias: str) -> DataFrame:
-        return _max_pop(frame).select(
-            F.round(
-                F.col("max_pop").cast("double") * n_cells / n, 6
-            ).alias(alias)
+    def _skew(assign: DataFrame, alias: str) -> DataFrame:
+        return (
+            assign.groupBy("cell")
+            .count()
+            .agg(F.max("count").alias("max_pop"))
+            .select(
+                F.round(
+                    F.col("max_pop").cast("double") * n_cells / n, 6
+                ).alias(alias)
+            )
         )
 
     skews = (
@@ -6731,147 +6294,27 @@ def q_ann_ivfpq_trained_recall_audit(
             )
         )
     )
-    candset = (
-        probed.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-        .join(
-            final_assign.select(
-                F.col("vec_id").alias("neighbor_id"), "cell"
-            ),
-            "cell",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
+    cands = _ivf_candidates(probed, final_assign)
     sub = pq_subvectors(emb)
     cb = pq_train_codebooks(emb)
-    codes = pq_encode(sub, cb).select(
-        F.col("vec_id").alias("neighbor_id"), "m", "cid"
-    )
-    qd = (
-        sub.filter(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("query_id"), "m", "sv")
-        .join(F.broadcast(cb), "m")
-        .select(
-            "query_id",
-            "m",
-            "cid",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-    )
-    adc = (
-        candset.join(codes, "neighbor_id")
-        .join(F.broadcast(qd), ["query_id", "m", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum("d2"), 6).alias("adist"))
-    )
-    wq = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    approx_adc = (
-        adc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    reranked = (
-        candset.join(F.broadcast(qv), "query_id")
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("nv"),
+    qv = _sample(vecs, F.col("v").alias("qv"))
+    out = recall_audit(
+        _l2_topk(vecs, qv),
+        [
+            (
+                "n_hit_adc",
+                "recall_adc",
+                _topk(
+                    _adc_ranked(
+                        pq_encode(sub, cb), cb, _sample(sub, "m", "sv"), cands
+                    )
+                ),
             ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            l2_sq(F.col("qv"), F.col("nv")).alias("d2"),
-        )
+            ("n_hit", "recall_at_3", _rerank(cands, vecs, qv)),
+        ],
+        n_cand=cands,
     )
-    wr = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    approx = (
-        reranked.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    ncand = candset.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx_adc.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_adc")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(F.broadcast(ncand), "query_id", "left")
-        .crossJoin(F.broadcast(skews))
-        .groupBy(
-            "query_id",
-            "n_cand",
-            "skew_id_sliced",
-            "skew_trained",
-            "skew_capped",
-            "coarse_err_id",
-            "coarse_err_trained",
-        )
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit_adc").cast("bigint").alias("n_hit_adc"),
-            F.count("hit").cast("bigint").alias("n_hit"),
-            F.round(
-                F.count("hit_adc").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_adc"),
-            F.round(
-                F.count("hit").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .select(
-            "query_id",
-            F.lit(n_cells).cast("bigint").alias("n_cells"),
-            F.coalesce(F.col("n_cand"), F.lit(0).cast("bigint")).alias(
-                "n_cand"
-            ),
-            "n_exact",
-            "n_hit_adc",
-            "n_hit",
-            "recall_adc",
-            "recall_at_3",
-            "skew_id_sliced",
-            "skew_trained",
-            "skew_capped",
-            "coarse_err_id",
-            "coarse_err_trained",
-        )
-    )
+    return _with_n_cells(out, n_cells).crossJoin(F.broadcast(skews))
 
 
 # --- OPQ-style rotation for the ADC tier (r14 stretch, VERDICT r13 #7) ----
@@ -7022,99 +6465,26 @@ GROUP BY e.query_id
 def q_opq_rotation_recall_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from quant_market_data_pipeline_spark.llm.similarity import (
-        as_double,
-        l2_sq,
-        opq_rotate,
-        pq_encode,
-        pq_subvectors,
-        pq_train_codebooks,
-    )
+    from quant_market_data_pipeline_spark.llm.similarity import opq_rotate
 
     emb = _embeddings(spark, sf_dir)
-    vecs = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    vecs = _vecs(emb)
     rvecs = materialize_corpus(opq_rotate(vecs))
     sub = materialize_corpus(pq_subvectors(emb))
     osub = materialize_corpus(pq_subvectors(rvecs, vec_col="v"))
     cb_p = pq_train_codebooks(emb)
     cb_r = pq_train_codebooks(rvecs, vec_col="v")
-    codes_p = pq_encode(sub, cb_p).select("vec_id", "m", "cid")
-    codes_r = pq_encode(osub, cb_r).select("vec_id", "m", "cid")
 
-    def adc_top3(
-        sub_f: DataFrame, codes: DataFrame, cb: DataFrame
-    ) -> DataFrame:
-        q = sub_f.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"), "m", "sv"
-        )
-        qd = q.join(F.broadcast(cb), "m").select(
-            "query_id",
-            "m",
-            "cid",
-            l2_sq(F.col("sv"), F.col("cv")).alias("d2"),
-        )
-        adc = (
-            codes.join(F.broadcast(qd), ["m", "cid"])
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-            .agg(F.round(F.sum("d2"), 6).alias("adist"))
-        )
-        w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-        return (
-            adc.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
-            .select("query_id", "neighbor_id")
+    def adc_top3(sub_f: DataFrame, cb: DataFrame) -> DataFrame:
+        return _topk(
+            _adc_ranked(pq_encode(sub_f, cb), cb, _sample(sub_f, "m", "sv"))
         )
 
-    approx_p = adc_top3(sub, codes_p, cb_p)
-    approx_r = adc_top3(osub, codes_r, cb_r)
-    qv = vecs.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    exact_scored = (
-        vecs.crossJoin(F.broadcast(qv))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            l2_sq(F.col("qv"), F.col("v")).alias("d2"),
-        )
-    )
-    we = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-    exact = (
-        exact_scored.withColumn("rn", F.row_number().over(we))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(
-            F.broadcast(
-                approx_p.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_p")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .join(
-            F.broadcast(
-                approx_r.select(
-                    "query_id", "neighbor_id", F.lit(1).alias("hit_r")
-                )
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_exact"),
-            F.count("hit_p").cast("bigint").alias("n_hit_adc_plain"),
-            F.count("hit_r").cast("bigint").alias("n_hit_adc_rot"),
-            F.round(
-                F.count("hit_p").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_adc_plain"),
-            F.round(
-                F.count("hit_r").cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_adc_rot"),
-        )
+    qv = _sample(vecs, F.col("v").alias("qv"))
+    return recall_audit(
+        _l2_topk(vecs, qv),
+        [
+            ("n_hit_adc_plain", "recall_adc_plain", adc_top3(sub, cb_p)),
+            ("n_hit_adc_rot", "recall_adc_rot", adc_top3(osub, cb_r)),
+        ],
     )

@@ -402,37 +402,6 @@ def test_embedding_outlier_ranks_planted_extreme(spark, tmp_path):
     assert out[0].outlier_score > out[1].outlier_score
 
 
-def test_ann_recall_audit_bounds(spark):
-    from quant_market_data_pipeline_spark.queries.llm import (
-        q_ann_recall_audit,
-    )
-
-    rows = q_ann_recall_audit(spark, SF_DIR).collect()
-    assert rows
-    for r in rows:
-        assert r.n_exact >= 1
-        assert 0 <= r.n_hit <= r.n_exact
-        assert 0.0 <= r.recall_at_3 <= 1.0
-
-
-def test_production_ann_recall_audits_bounds_and_coverage(spark):
-    """r8: the PRODUCTION indexes (multi-table LSH, IVF) each ship a
-    measured recall on the same 20-query exact ground truth; per-query
-    rows are bounded and cover the full sample."""
-    from quant_market_data_pipeline_spark.queries.llm import (
-        q_ann_ivf_recall_audit,
-        q_ann_mt_recall_audit,
-    )
-
-    for fn in (q_ann_mt_recall_audit, q_ann_ivf_recall_audit):
-        rows = fn(spark, SF_DIR).collect()
-        assert len(rows) == 20  # every sampled query id reports
-        for r in rows:
-            assert 1 <= r.n_exact <= 3
-            assert 0 <= r.n_hit <= r.n_exact
-            assert 0.0 <= r.recall_at_3 <= 1.0
-
-
 def test_every_registered_query_documented():
     """COVERAGE.md is the judge's crosswalk: every registered query name
     must appear in it (family tables or the crosswalk appendix)."""

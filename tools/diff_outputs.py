@@ -3,17 +3,39 @@ and the .ab_base round-start worktree) on one fixture dir — the
 result-identity gate for restructured queries.
 
 Runs in TWO subprocesses (one per tree) so each tree's modules import
-cleanly, writes sorted row dumps, diffs them here.
+cleanly, writes sorted row dumps, diffs them here.  Next to the rows it
+compares each query's physical plan (``executedPlan``, taken before the
+query runs) after ``normalize_plan`` and prints PLAN IDENTICAL or a
+unified diff.
 
 Usage: python tools/diff_outputs.py <sf_dir> <query> [query ...]
 """
 
 from __future__ import annotations
 
+import difflib
 import json
 import os
+import re
 import subprocess
 import sys
+
+# Per-build counters that differ between two builds of the same plan:
+# expression ids, exchange plan ids, lambda variable ids and the names
+# of common subexpressions.
+_PLAN_NOISE = [
+    (re.compile(r"#\d+L?"), ""),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"(lambda [A-Za-z]+)_\d+"), r"\1"),
+    (re.compile(r"_common_expr_\d+"), "_common_expr"),
+]
+
+
+def normalize_plan(plan: str) -> str:
+    for pat, repl in _PLAN_NOISE:
+        plan = pat.sub(repl, plan)
+    return plan
+
 
 RUNNER = r"""
 import sys, json
@@ -29,11 +51,12 @@ registry = load_all()
 out = {}
 for name in names:
     df = registry[name].spark(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     cols = sorted(df.columns)
     rows = sorted(
         tuple(repr(r[c]) for c in cols) for r in df.collect()
     )
-    out[name] = {"cols": cols, "rows": rows}
+    out[name] = {"cols": cols, "rows": rows, "plan": plan}
 print("ROWS " + json.dumps(out))
 """
 
@@ -70,6 +93,16 @@ def main() -> None:
             f"(n={len(new[name]['rows'])} vs {len(old[name]['rows'])})"
         )
         ok = ok and same_cols and same_rows
+        old_plan = normalize_plan(old[name]["plan"]).splitlines()
+        new_plan = normalize_plan(new[name]["plan"]).splitlines()
+        if old_plan == new_plan:
+            print(f"{name}: PLAN IDENTICAL")
+        else:
+            print(f"{name}: plan diff (base -> working tree)")
+            for line in difflib.unified_diff(
+                old_plan, new_plan, "base", "working", lineterm=""
+            ):
+                print(line)
     print("IDENTICAL" if ok else "DIVERGED")
 
 
